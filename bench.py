@@ -566,8 +566,8 @@ HEAVY_QUERIES = [
 # FIXED list so every bench invocation — 32-core and 8-core driver runs
 # alike — emits the same names and the driver's per-query/scaling diffs
 # get a full intersection.  Append-only like BENCH_QUERIES; the byte
-# budget in main() drops entries from the END of the sorted-by-cheapest
-# tail if values ever widen past the tail capture.
+# budget in _summary_line() drops entries from the END of this list if
+# values ever widen past the tail capture.
 SUMMARY_QUERIES = [
     "basket_apriori_triples", "basket_rules", "corpus_clean_keepers",
     "dedup_clusters", "dedup_editdistance", "dedup_embedding",
@@ -803,19 +803,24 @@ def main() -> None:
         "n_queries": len(timings),
     }
     # driver-visible per-query map (see module docstring): the FIXED
-    # SUMMARY_QUERIES subset from the headline single-sample series,
-    # byte-budgeted so the final line always fits the driver's
-    # 2000-byte tail capture (drop the CHEAPEST members first if the
-    # encoded line would overflow — membership stays deterministic
-    # because the drop order is value-then-name on this run's data)
-    summary = {n: round(timings[n], 2) for n in SUMMARY_QUERIES
-               if n in timings}
-    result["queries"] = summary
-    while summary and len(json.dumps(result, separators=(",", ":"))) \
-            > _SUMMARY_LINE_BUDGET:
-        cheapest = min(summary, key=lambda n: (summary[n], n))
-        del summary[cheapest]
-    print(json.dumps(result, separators=(",", ":")))
+    # SUMMARY_QUERIES subset from the headline single-sample series
+    result["queries"] = {n: round(timings[n], 2) for n in SUMMARY_QUERIES
+                         if n in timings}
+    print(_summary_line(result))
+
+
+def _summary_line(result: dict, budget: int = _SUMMARY_LINE_BUDGET) -> str:
+    """Encode the final line, dropping ``result["queries"]`` members
+    from the END of SUMMARY_QUERIES while it exceeds ``budget`` bytes
+    (the driver's 2000-byte tail capture).  The drop order is the
+    list's, never this run's values, so the 32-core and 8-core runs
+    keep the same membership."""
+    summary = result["queries"]
+    line = json.dumps(result, separators=(",", ":"))
+    while summary and len(line) > budget:
+        summary.popitem()
+        line = json.dumps(result, separators=(",", ":"))
+    return line
 
 
 if __name__ == "__main__":

@@ -9,5 +9,4 @@ hashing/vector primitives in :mod:`kmr_spark.functions`.
 - :mod:`.similarity` — brute-force cosine top-k + IVF-bucketed ANN
 - :mod:`.textstats`  — token counts, quality scoring, lang-id, fingerprints
 - :mod:`.multimodal` — binary-column plumbing for image/audio payloads
-- :mod:`.registry`   — QUERIES / ORACLE_SQL aggregation for the driver
 """

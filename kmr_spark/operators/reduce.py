@@ -125,7 +125,9 @@ def scan_distributed(df: DataFrame, value: str | list[str],
     No single-partition global window anywhere, so this is the form
     that survives 100 TB (scan_on_values stays as the windowed
     parity/debug surface). The measure column must be integral —
-    float prefix sums would be partition-order-dependent.
+    float prefix sums would be partition-order-dependent — and
+    non-NULL: a NULL raises ``ValueError`` (the per-partition
+    ``count(v)`` rides on the same collect as the sums).
 
     The result is materialized before returning (ranking's task-id
     caveat: the offset/pid columns are only the sort's partition index
@@ -142,9 +144,17 @@ def scan_distributed(df: DataFrame, value: str | list[str],
     totals = (
         sdf.select(F.spark_partition_id().alias("pid"),
                    *[F.col(v) for v in values])
-        .groupBy("pid").agg(*[F.sum(v).alias(v) for v in values])
+        .groupBy("pid").agg(F.count(F.lit(1)).alias("__rows"),
+                            *[F.sum(v).alias(v) for v in values],
+                            *[F.count(v).alias(f"__n_{v}") for v in values])
         .collect()
     )
+    nulls = [v for v in values
+             if any(r[f"__n_{v}"] != r["__rows"] for r in totals)]
+    if nulls:
+        sdf.unpersist()
+        raise ValueError(
+            f"scan_distributed: NULL values in measure column(s) {nulls}")
     offsets: dict[int, list[int]] = {}
     acc = [0] * len(values)
     for r in sorted(totals, key=lambda r: r["pid"]):

@@ -26,6 +26,10 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+#: directory containing the ``kmr_spark`` package
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__)))
+
 #: Tables the driver testdata provides (TESTDATA.md).
 TABLES = (
     "region",
@@ -159,6 +163,11 @@ def get_spark(app_name: str = "kmr_spark", shuffle_partitions: int | None = None
         # metaspace at worst, amortized across the session lifetime.
         .config("spark.sql.codegen.cache.maxEntries", "4000")
         .config("spark.ui.enabled", "false")
+        # Python workers start in Spark's cwd with only Spark's own
+        # PYTHONPATH: ship the directory holding kmr_spark so a UDF that
+        # imports it works wherever the driver was started (Spark
+        # appends the launcher's PYTHONPATH to this entry)
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     if not os.environ.get("SPARK_GRAFT_NO_LOCAL_MASTER"):
         builder = builder.master(f"local[{cpus}]")

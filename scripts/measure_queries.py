@@ -61,9 +61,10 @@ def main() -> None:
         if args.plans:
             os.makedirs(args.plans, exist_ok=True)
             # materialize_release stubbed to a pass-through so the
-            # dump shows the PIPELINE's plan, not the checkpoint scan
-            # (and building the frame doesn't eagerly execute it) —
-            # ADVICE r11 #1; timed runs below use the real function
+            # dump shows the PIPELINE's plan, not the checkpoint scan;
+            # the stub skips only the final materialization (exscan /
+            # ranking queries still run their sort + collect jobs while
+            # the frame is built); timed runs below use the real function
             from plan_stub import passthrough_materialize
             with passthrough_materialize():
                 df = queries[name](spark, sf_dir)

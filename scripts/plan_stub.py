@@ -14,7 +14,8 @@ materialization).
 ``materialize_release`` is imported both module-level and
 function-local across kmr_spark, so the stub patches the session
 module AND every already-imported kmr_spark module whose attribute is
-the real function.
+the real function; on exit it restores every kmr_spark module holding
+the stub, including modules first imported inside the block.
 """
 
 from __future__ import annotations
@@ -32,15 +33,16 @@ def passthrough_materialize():
     def stub(out, *cached):
         return out
 
-    patched = []
-    for name, mod in list(sys.modules.items()):
-        if not name.startswith("kmr_spark") or mod is None:
-            continue
-        if getattr(mod, "materialize_release", None) is real:
-            setattr(mod, "materialize_release", stub)
-            patched.append(mod)
+    def swap(old, new):
+        for name, mod in list(sys.modules.items()):
+            if (name.startswith("kmr_spark") and mod is not None
+                    and getattr(mod, "materialize_release", None) is old):
+                setattr(mod, "materialize_release", new)
+
+    swap(real, stub)
     try:
         yield
     finally:
-        for mod in patched:
-            setattr(mod, "materialize_release", real)
+        # re-scan: a module first imported inside the block bound the
+        # stub at import time and must get the real function back too
+        swap(stub, real)

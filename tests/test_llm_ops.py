@@ -2,13 +2,16 @@
 
 import pytest
 
-from kmr_spark.llm_ops import registry
+import __spark_entry__ as entry
 from tests.conftest import assert_matches_oracle
 
+LLM_OPS = {n: (m.QUERIES[n], m.ORACLE_SQL[n]) for m in entry._modules()
+           if m.__name__.startswith("kmr_spark.llm_ops.") for n in m.QUERIES}
 
-@pytest.mark.parametrize("name", sorted(registry.QUERIES))
+
+@pytest.mark.parametrize("name", sorted(LLM_OPS))
 def test_llm_op_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, registry.QUERIES[name], registry.ORACLE_SQL[name])
+    assert_matches_oracle(spark, duck, *LLM_OPS[name])
 
 
 def test_llm_queries_release_their_caches(spark):

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import itertools
 
+import pytest
 from conftest import SF_DIR, assert_matches_oracle
 
 from kmr_spark.operators.interval import interval_overlap_join
@@ -56,8 +57,6 @@ def test_overlap_join_equals_naive_product(spark):
 
 
 def test_overlap_join_rejects_bad_width(spark):
-    import pytest
-
     df = spark.createDataFrame([(1, 0, 1)], ["i", "lo", "hi"])
     with pytest.raises(ValueError):
         interval_overlap_join(df, df.selectExpr("i as j", "lo as rlo",
@@ -160,3 +159,21 @@ def test_scan_distributed_matches_window_form(spark):
     expect = {r.k: r.scan for r in
               scan_on_values(df, "v", [F.col("k")]).collect()}
     assert got == expect
+
+
+def test_scan_distributed_rejects_null_measure(spark):
+    """A NULL measure raises naming the column (instead of being
+    skipped by the per-partition sum, or crashing the driver exscan
+    when a whole partition is NULL) and releases the sorted cache."""
+    from pyspark.sql import functions as F
+
+    from kmr_spark.operators.reduce import scan_distributed
+
+    df = spark.createDataFrame(
+        [(i, None if i == 3 else i, i) for i in range(40)],
+        "k long, v long, w long").repartition(3)
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    with pytest.raises(ValueError, match=r"\['v'\]"):
+        scan_distributed(df, ["w", "v"], [F.col("k")])
+    assert cm.isEmpty()
